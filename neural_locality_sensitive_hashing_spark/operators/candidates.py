@@ -35,7 +35,7 @@ Two physical strategies (``DedupConfig.pair_strategy``):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
@@ -108,18 +108,32 @@ def _chain_tree_pairs(ids: Column, s: Column) -> Column:
 def candidate_pairs(
     bands: DataFrame,
     cfg: DedupConfig,
+    observation: Observation | None = None,
 ) -> DataFrame:
-    """(doc_id, band, bucket) -> distinct candidate (a, b) with a < b."""
+    """(doc_id, band, bucket) -> distinct candidate (a, b) with a < b.
+
+    ``observation``, grouped strategy only: the action that runs the
+    result also fills it with ``bucket_stats``' per-band figures as
+    ``band_XX_max_bucket`` and ``band_XX_pair_mass`` (see
+    ``_candidate_pairs_grouped``). The windowed strategy never feeds it.
+    """
     if cfg.pair_strategy == "windowed":
         return _candidate_pairs_windowed(bands, cfg)
-    return _candidate_pairs_grouped(bands, cfg)
+    return _candidate_pairs_grouped(bands, cfg, observation)
 
 
-def _candidate_pairs_grouped(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
+def _candidate_pairs_grouped(
+    bands: DataFrame, cfg: DedupConfig, observation: Observation | None = None
+) -> DataFrame:
     """One exchange: hash-agg to sorted member arrays, emit pairs natively.
 
     CASE branches are evaluated lazily per row, so a mega-bucket never
     materializes its O(s²) all-pairs array — only the O(s) chain+tree.
+
+    With ``observation``, the per-band skew figures ride the same pass
+    over the multi-member buckets: a size-1 bucket adds 0 to
+    ``pair_mass``, and a band without one has ``max_bucket`` 1, so the
+    values equal ``bucket_stats``' on any non-empty input.
     """
     cap = cfg.bucket_pair_cap
     if cfg.candidate_partitions:
@@ -131,12 +145,32 @@ def _candidate_pairs_grouped(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     ids = F.col("ids")
     s = F.size(ids)
+    if observation is not None:
+        grouped = grouped.observe(observation, *_band_skew(s, cfg.num_bands))
     pairs_arr = F.when(s <= cap, _all_pairs(ids, s)).otherwise(_chain_tree_pairs(ids, s))
     return (
         grouped.select(F.explode(pairs_arr).alias("p"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .dropDuplicates(["a", "b"])
     )
+
+
+def _band_skew(s: Column, num_bands: int) -> list[Column]:
+    """Per-band max bucket size and pair mass over (band, ids) rows, the
+    size taken as bigint so the pair mass cannot overflow int."""
+    n = s.cast("long")
+    exprs = []
+    for b in range(num_bands):
+        in_band = F.col("band") == b
+        exprs.append(
+            F.coalesce(F.max(F.when(in_band, n)), F.lit(1)).alias(f"band_{b:02d}_max_bucket")
+        )
+        exprs.append(
+            F.coalesce(F.sum(F.when(in_band, n * (n - 1) / 2)), F.lit(0.0)).alias(
+                f"band_{b:02d}_pair_mass"
+            )
+        )
+    return exprs
 
 
 def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:

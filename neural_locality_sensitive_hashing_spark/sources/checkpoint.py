@@ -1,4 +1,4 @@
-"""Checkpoint catalog: per-stage snapshot tables + per-partition lineage.
+"""Checkpoint catalog: per-stage snapshot tables + per-file lineage.
 
 The reference caches its expensive intermediate (self-kNN) to a file and
 reloads it if present (``precompute.py:89-97``, ``nlsh/data.py:41-44``);
@@ -10,19 +10,49 @@ Storage is parquet directories with a ``_meta.json`` sidecar (an
 Iceberg-style snapshot: fingerprint, schema, row count, commit time — the
 sandbox has no Iceberg runtime jar; when one is available the same writer
 API maps to ``df.writeTo(...).createOrReplace()``, gated in
-``write_snapshot``). Lineage: every write appends one row per partition
-(stage, partition_id, rows, fingerprint) to the ``_lineage`` table.
+``write_snapshot``). A snapshot costs its parquet write and no other Spark
+job: the row count and the lineage come from the written part files'
+parquet footers, read on the driver, and aggregates the caller observed on
+the written frame (``df.observe``) are kept in ``_meta.json`` under
+``observed``.
+
+Lineage: one row per written part file (stage, partition_id, rows,
+fingerprint, wall_ms), ``partition_id`` being the write task's partition
+number. Lineage and ``_metrics`` rows are small parquet files written on
+the driver, one file per (stage, fingerprint) and one per run_id,
+overwritten in place, so rewriting a snapshot or re-logging a run never
+duplicates its record. Spark reads each table as one directory, parts
+written by Spark jobs included.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
+from urllib.parse import quote
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_PART_FILE = re.compile(r"part-(\d+)-")
+_LINEAGE_SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("partition_id", pa.int32()),
+    ("rows", pa.int64()),
+    ("fingerprint", pa.string()),
+    ("wall_ms", pa.int32()),
+])
+_METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("metric", pa.string()),
+    ("value", pa.float64()),
+])
 
 
 def _meta_path(base: str, stage: str) -> str:
@@ -31,6 +61,17 @@ def _meta_path(base: str, stage: str) -> str:
 
 def _data_path(base: str, stage: str) -> str:
     return os.path.join(base, stage, "data")
+
+
+def _write_table(table_dir: str, name: str, table: pa.Table) -> None:
+    """Write one driver-side parquet file, replacing any file of that
+    name atomically: the temp file is dot-prefixed, which Spark's readers
+    skip."""
+    os.makedirs(table_dir, exist_ok=True)
+    final = os.path.join(table_dir, quote(name, safe="") + ".parquet")
+    tmp = os.path.join(table_dir, "." + os.path.basename(final) + ".tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
 
 
 class CheckpointCatalog:
@@ -56,25 +97,43 @@ class CheckpointCatalog:
 
     # -- snapshots ----------------------------------------------------------
 
-    def has_snapshot(self, stage: str, fingerprint: str) -> bool:
-        p = _meta_path(self.base, stage)
-        if not os.path.exists(p):
-            return False
+    def snapshot_meta(self, stage: str) -> dict | None:
+        """The stage's ``_meta.json`` record, or None when it is missing
+        or unreadable."""
         try:
-            with open(p) as f:
-                meta = json.load(f)
+            with open(_meta_path(self.base, stage)) as f:
+                return json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
-        return meta.get("fingerprint") == fingerprint and meta.get("committed") is True
+            return None
+
+    def has_snapshot(self, stage: str, fingerprint: str) -> bool:
+        meta = self.snapshot_meta(stage)
+        return (
+            meta is not None
+            and meta.get("fingerprint") == fingerprint
+            and meta.get("committed") is True
+        )
 
     def read_snapshot(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(_data_path(self.base, stage))
 
-    def write_snapshot(self, df: DataFrame, stage: str, fingerprint: str) -> DataFrame:
-        """Write stage output + meta + per-partition lineage; returns a
-        re-read of the snapshot (so downstream reads columnar parquet and
-        the upstream lineage is cut — the checkpoint role in the fixpoint
-        loop)."""
+    def write_snapshot(
+        self,
+        df: DataFrame,
+        stage: str,
+        fingerprint: str,
+        observation: Observation | None = None,
+    ) -> DataFrame:
+        """Write stage output + meta + lineage; returns a re-read of the
+        snapshot (so downstream reads columnar parquet and the upstream
+        lineage is cut — the checkpoint role in the fixpoint loop).
+
+        The parquet write is the only Spark job. The row count, the
+        schema and the lineage (one row per written part file) come from
+        the part files' footers. ``observation`` must ride ``df`` (an
+        ``Observation`` passed to ``df.observe`` on the written frame or
+        upstream of it): the write feeds it, and its values are stored in
+        ``_meta.json`` under ``observed``."""
         t0 = time.time()
         if self.iceberg_table_prefix is not None:
             table = f"{self.iceberg_table_prefix}.{stage}"
@@ -94,32 +153,41 @@ class CheckpointCatalog:
         data = _data_path(self.base, stage)
         df.write.mode("overwrite").parquet(data)
 
-        out = self.spark.read.parquet(data)
-        part_rows = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("fingerprint", F.lit(fingerprint))
-            .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
+        parts = sorted(f for f in os.listdir(data) if _PART_FILE.match(f))
+        footers = [pq.read_metadata(os.path.join(data, f)) for f in parts]
+        # the schema Spark stored in the footer is the one it would infer;
+        # passing it skips the inference job a plain re-read would run
+        schema = StructType.fromJson(
+            json.loads(footers[0].metadata[_SPARK_SCHEMA_KEY])
         )
-        lineage_dir = os.path.join(self.base, "_lineage")
-        part_rows.select(
-            "stage", "partition_id", "rows", "fingerprint", "wall_ms"
-        ).write.mode("append").parquet(lineage_dir)
+        out = self.spark.read.schema(schema).parquet(data)
+        wall_ms = int((time.time() - t0) * 1000)
+        lineage = pa.table(
+            {
+                "stage": [stage] * len(parts),
+                "partition_id": [int(_PART_FILE.match(f).group(1)) for f in parts],
+                "rows": [m.num_rows for m in footers],
+                "fingerprint": [fingerprint] * len(parts),
+                "wall_ms": [wall_ms] * len(parts),
+            },
+            schema=_LINEAGE_SCHEMA,
+        )
+        _write_table(
+            os.path.join(self.base, "_lineage"), f"lineage-{stage}-{fingerprint}", lineage
+        )
 
-        n_rows = out.count()
+        meta = {
+            "stage": stage,
+            "fingerprint": fingerprint,
+            "rows": sum(m.num_rows for m in footers),
+            "schema": schema.jsonValue(),
+            "wall_ms": int((time.time() - t0) * 1000),
+            "committed": True,
+        }
+        if observation is not None:
+            meta["observed"] = observation.get
         with open(_meta_path(self.base, stage), "w") as f:
-            json.dump(
-                {
-                    "stage": stage,
-                    "fingerprint": fingerprint,
-                    "rows": n_rows,
-                    "schema": out.schema.jsonValue(),
-                    "wall_ms": int((time.time() - t0) * 1000),
-                    "committed": True,
-                },
-                f,
-            )
+            json.dump(meta, f)
         return out
 
     def drop_snapshot(self, stage: str) -> None:
@@ -154,12 +222,20 @@ class CheckpointCatalog:
         return self.spark.read.parquet(p)
 
     # -- metrics (S8: the reference's logger.log(name, value, step) sink,
-    #    ``nlsh/loggers.py:6-97``, as an appendable table next to lineage) --
+    #    ``nlsh/loggers.py:6-97``, as a table next to lineage) --
 
     def write_metrics(self, metrics: dict[str, float], run_id: str) -> None:
-        rows = [(run_id, k, float(v)) for k, v in metrics.items()]
-        df = self.spark.createDataFrame(rows, "run_id string, metric string, value double")
-        df.write.mode("append").parquet(os.path.join(self.base, "_metrics"))
+        """One run's record: a driver-side file named by ``run_id``,
+        replaced when the run logs again."""
+        table = pa.table(
+            {
+                "run_id": [run_id] * len(metrics),
+                "metric": list(metrics),
+                "value": [float(v) for v in metrics.values()],
+            },
+            schema=_METRICS_SCHEMA,
+        )
+        _write_table(os.path.join(self.base, "_metrics"), f"metrics-{run_id}", table)
 
     def metrics(self) -> DataFrame | None:
         p = os.path.join(self.base, "_metrics")

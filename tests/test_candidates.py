@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
@@ -86,6 +87,24 @@ def test_bucket_stats(spark):
     stats = {r.band: r for r in bucket_stats(explode_bands(df, CFG)).collect()}
     assert stats[0].n_buckets == 1 and stats[0].max_bucket == 5
     assert stats[0].pair_mass == 10
+
+
+def test_observed_band_skew_equals_bucket_stats(spark):
+    """The per-band figures observed on the grouped pass equal
+    bucket_stats', for an over-cap bucket and for a band holding only
+    singleton buckets (max_bucket 1, pair_mass 0) alike."""
+    rows = [(i, [0, 0, 1, 1, 2, 2, 100 + i, 100 + i]) for i in range(6)]
+    rows += [(10 + i, [0, 9, 9 + i, 9 + i, 50 + i, 50 + i, 200 + i, 200 + i]) for i in range(3)]
+    df = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+    bands = explode_bands(df, CFG)
+    obs = Observation()
+    assert candidate_pairs(bands, CFG, obs).count() > 0
+    want = {}
+    for r in bucket_stats(bands).collect():
+        want[f"band_{r.band:02d}_max_bucket"] = r.max_bucket
+        want[f"band_{r.band:02d}_pair_mass"] = r.pair_mass
+    assert want["band_03_max_bucket"] == 1 and want["band_03_pair_mass"] == 0
+    assert obs.get == want
 
 
 def test_grouped_equals_windowed_strategy(spark):

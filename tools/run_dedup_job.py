@@ -325,7 +325,6 @@ def main() -> None:
             input_token=_input_token(args.pages, n_docs),
         )
         clusters, rep = pipe.run(pages)
-        n_clusters = clusters.select("cluster_id").distinct().count()
         wall = round(time.time() - t_all, 2)
         report = {
             "docs": n_docs,
@@ -336,9 +335,10 @@ def main() -> None:
                 s.stage: {"cached": s.cached, "rows": s.rows, "wall_sec": s.wall_sec}
                 for s in rep.stages
             },
-            "candidate_pairs": -1,
-            "dup_pairs": -1,
-            "clusters": n_clusters,
+            # committed snapshot rows; one keep_list row per cluster
+            "candidate_pairs": rep.stage("cand_pairs").rows,
+            "dup_pairs": rep.stage("dup_pairs").rows,
+            "clusters": rep.stage("keep_list").rows,
             "resumed_stages": sorted(rep.cached_stages()),
         }
         if args.keep_list_out:
