@@ -15,7 +15,7 @@ moved from a learned loss to the (b, r) split.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -75,29 +75,18 @@ class DedupConfig:
     verify_broadcast_min_docs: int = 16_000
     verify_broadcast_max_docs: int = 300_000
 
-    # SimHash secondary verifier
-    simhash_bits: int = 64
+    # SimHash secondary verifier (64-bit codes)
     simhash_hamming_max: int = 3
 
     # skew handling: buckets larger than this emit a sorted chain of
     # consecutive pairs instead of all O(n^2) pairs (connectivity-preserving)
     bucket_pair_cap: int = 256
 
-    # candidate physical strategy: "grouped" = one hash-agg exchange with
-    # native pair emission (default); "windowed" = round-1 rank + self-join
-    # (bounded per-row memory for degenerate buckets, one extra exchange)
-    pair_strategy: str = "grouped"
-
     # connected components
     max_cc_iterations: int = 50
 
     # suffix-array long-repeat pass
     long_repeat_min_tokens: int = 64
-
-    # partitioning
-    candidate_partitions: int | None = None  # None → spark.sql.shuffle.partitions
-
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.num_bands * self.rows_per_band != self.num_perm:

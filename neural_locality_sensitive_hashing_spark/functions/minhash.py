@@ -1,4 +1,5 @@
-"""MinHash signatures as a batched, vectorized pandas UDF.
+"""MinHash signatures and LSH band hashes in one batched, vectorized
+pandas UDF.
 
 The reference hashes a full corpus in 4096-row batches through its encoder
 (``nlsh/indexer.py:40-54``); the Spark analogue is one Arrow batch at a time
@@ -17,7 +18,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
 
 def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -35,43 +35,6 @@ def minhash_numpy(shingle_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> n
     with np.errstate(over="ignore"):
         vals = a[:, None] * h[None, :] + b[:, None]
     return vals.min(axis=1).view(np.int64)
-
-
-def make_minhash_udf(num_perm: int, seed: int):
-    """Returns pandas_udf: array<bigint> shingle hashes -> array<bigint> sig.
-
-    Rows with null/empty shingle sets return null.
-    """
-    a_params, b_params = minhash_params(num_perm, seed)
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_sig(hashes: pd.Series) -> pd.Series:
-        arrs = []
-        keep = np.zeros(len(hashes), dtype=bool)
-        for i, v in enumerate(hashes):
-            if v is not None and len(v) > 0:
-                arrs.append(np.asarray(v, dtype=np.int64).view(np.uint64))
-                keep[i] = True
-        out = np.empty(len(hashes), dtype=object)
-        if arrs:
-            flat = np.concatenate(arrs)
-            lens = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=len(arrs))
-            starts = np.zeros(len(arrs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            sigs = np.empty((len(arrs), num_perm), dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for j in range(num_perm):
-                    v = a_params[j] * flat + b_params[j]
-                    sigs[:, j] = np.minimum.reduceat(v, starts)
-            sig_rows = sigs.view(np.int64)
-            k = 0
-            for i in range(len(hashes)):
-                if keep[i]:
-                    out[i] = sig_rows[k]
-                    k += 1
-        return pd.Series(out)
-
-    return minhash_sig
 
 
 def _rotl7(x: np.ndarray) -> np.ndarray:
@@ -176,9 +139,8 @@ def band_hashes_numpy(sigs: np.ndarray, num_bands: int, rows_per_band: int) -> n
     """(n, num_perm) uint64 signatures -> (n, num_bands) int64 band-bucket
     hashes: rotl7-xor-multiply fold of each band's rows with the band index
     mixed in (identical docs collide per band; different bands never
-    collide with each other). Same contract as candidates.band_buckets,
-    different hash family — banding only needs consistency, not a specific
-    hash."""
+    collide with each other). The engine's one band-hash family: banding
+    only needs consistency, not a specific hash."""
     n = sigs.shape[0]
     b = sigs.reshape(n, num_bands, rows_per_band)
     mult = np.uint64(0x9E3779B97F4A7C15)
@@ -196,41 +158,34 @@ def make_shingle_sig_udf(
     k: int,
     num_perm: int,
     seed: int,
-    num_bands: int = 0,
-    rows_per_band: int = 0,
+    num_bands: int,
+    rows_per_band: int,
     sig_prefix_perms: int = 0,
     shingle_hash_bytes: int = 8,
 ):
-    """Fused text -> struct(sh binary, sig array<long>) pandas UDF — or,
-    with banding params set, text -> struct(sh binary, bands array<long>).
+    """Fused text -> struct(sh binary, bands array<long>[, sigp binary])
+    pandas UDF.
 
-    ``sig_prefix_perms`` > 0 (banded mode) adds a ``sigp`` binary column:
-    the first P minhash values truncated to uint32 LE (4 B/slot) — the
-    verify screen's estimator payload, ~5x lighter than the shingle set.
+    ``sig_prefix_perms`` > 0 adds a ``sigp`` binary column: the first P
+    minhash values truncated to uint32 LE (4 B/slot) — the verify screen's
+    estimator payload, ~5x lighter than the shingle set.
     ``shingle_hash_bytes=4`` stores ``sh`` as truncated uint32 (sorted,
     re-uniqued): halves the exact-verify gather bytes; Jaccard
     perturbation is O(|A||B|/2^32) per pair.
 
-    One Arrow pass does tokenize + shingle + MinHash (+ banding) entirely
+    One Arrow pass does tokenize + shingle + MinHash + banding entirely
     in the Python worker (numpy): measured ~2.5x less total CPU than the
     native higher-order-function shingle path at 32 local threads, because
     interpreted zip_with/transform expressions allocate per-element garbage
     that stalls the shared JVM heap — worker processes have no shared GC.
-    The fused-banding variant additionally avoids caching the 1 KB/doc
-    signature and evaluating 32 interpreted slice+xxhash64 exprs per doc
-    (32M transient JVM arrays per 1M docs) — the signature never leaves
-    the Python worker. Token hashes are memoized per batch (Zipfian text
-    -> high hit rate).
+    The 1 KB/doc signature never leaves the worker: only its band hashes
+    (``band_hashes_numpy``) and optional prefix do. Token hashes are
+    memoized per batch (Zipfian text -> high hit rate).
     """
     a_params, b_params = minhash_params(num_perm, seed)
-    emit_bands = num_bands > 0
-    emit_prefix = emit_bands and sig_prefix_perms > 0
-    if emit_bands:
-        out_schema = "sh binary, bands array<long>"
-        if emit_prefix:
-            out_schema += ", sigp binary"
-    else:
-        out_schema = "sh binary, sig array<long>"
+    out_schema = "sh binary, bands array<long>"
+    if sig_prefix_perms:
+        out_schema += ", sigp binary"
 
     @pandas_udf(out_schema)
     def shingle_sig(texts: pd.Series) -> pd.DataFrame:
@@ -258,43 +213,14 @@ def make_shingle_sig_udf(
             ]
         else:
             sh_col = [s.view(np.int64).tobytes() for s in sets]
-        if emit_bands:
-            bands = band_hashes_numpy(sigs, num_bands, rows_per_band)
-            cols = {"sh": sh_col, "bands": [bands[i] for i in range(len(sets))]}
-            if emit_prefix:
-                pref = sigs[:, :sig_prefix_perms].astype(np.uint32)  # low 32 bits
-                cols["sigp"] = [pref[i].tobytes() for i in range(len(sets))]
-            return pd.DataFrame(cols)
-        sig_rows = sigs.view(np.int64)
-        return pd.DataFrame(
-            {"sh": sh_col, "sig": [sig_rows[i] for i in range(len(sets))]}
-        )
+        bands = band_hashes_numpy(sigs, num_bands, rows_per_band)
+        cols = {"sh": sh_col, "bands": [bands[i] for i in range(len(sets))]}
+        if sig_prefix_perms:
+            pref = sigs[:, :sig_prefix_perms].astype(np.uint32)  # low 32 bits
+            cols["sigp"] = [pref[i].tobytes() for i in range(len(sets))]
+        return pd.DataFrame(cols)
 
     return shingle_sig
-
-
-def make_sig_prefix_udf(prefix_perms: int):
-    """sig array<long> -> sigp binary: the first P signature slots
-    truncated to uint32 LE (4 B/slot) — bit-identical to the ``sigp`` the
-    fused banded kernel emits, but derived from an already-materialized
-    full signature.  Lets the checkpointed pipeline (whose `signatures`
-    stage stores the full sig) feed the two-tier verify screen without
-    re-signaturing the corpus."""
-
-    @pandas_udf("binary")
-    def sig_prefix(sig: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if s is None
-                else np.asarray(s, dtype=np.int64)[:prefix_perms]
-                .astype(np.uint32)
-                .tobytes()
-                for s in sig
-            ]
-        )
-
-    return sig_prefix
 
 
 def shingle_bytes_to_array(b: bytes | None) -> np.ndarray:

@@ -1,4 +1,4 @@
-"""LSH banding + bucket-grouped candidate-pair generation with skew control.
+"""Bucket-grouped candidate-pair generation with skew control.
 
 This is the Spark realization of the reference's inverted index + probe
 (``nlsh/indexer.py:6-96``): the bucket→rows dict is never materialized —
@@ -13,9 +13,7 @@ connectivity-preserving for union-find (every member still links to the
 component) at O(n) pairs and O(log n) component diameter — and the drop is
 observable via ``bucket_stats``, never silent.
 
-Two physical strategies (``DedupConfig.pair_strategy``):
-
-``grouped`` (default) — ONE hash-partitioned exchange:
+Physical strategy: ONE hash-partitioned exchange —
     groupBy(band, bucket) -> sorted member array -> emit pairs natively
     (all-pairs / chain+tree as array expressions) -> explode.
     No sort, no join, no persist; the only per-row memory bound is the
@@ -23,14 +21,12 @@ Two physical strategies (``DedupConfig.pair_strategy``):
     bucket is an 80 MB row; at 10^12-doc scale one would bound it further
     with a two-level salt-chain: chain within (bucket, salt) shards, then
     chain the shard minima — same connectivity, rows capped at
-    bucket_size/n_salt). Replaces the round-1 windowed plan after it
-    measured as the worst-scaling stage (window sort + self-join = two
-    exchanges + a sort vs one agg exchange).
+    bucket_size/n_salt). It replaced the round-1 window rank + self-join
+    plan, which measured as the worst-scaling stage (window sort +
+    self-join = two exchanges + a sort vs one agg exchange).
 
-``windowed`` — the round-1 plan (window rank + self-join). Bounded per-row
-    memory (streaming window), at the cost of an extra exchange + sort and
-    three rank joins for over-cap buckets. Keep for environments where a
-    single degenerate bucket exceeds task memory.
+Band buckets come from the fused signature kernel
+(``operators.dedup.banded_signatures_fused`` + ``explode_fused_bands``).
 """
 
 from __future__ import annotations
@@ -39,33 +35,6 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-
-
-def band_buckets(sig_col: Column, num_bands: int, rows_per_band: int) -> Column:
-    """signature array<bigint> -> array<bigint> of per-band bucket hashes.
-
-    bucket[b] = xxhash64(b, sig[b*r : (b+1)*r]) — band index is mixed in so
-    identical row-slices in different bands never collide. Fully native.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.xxhash64(b, F.slice(sig_col, b * F.lit(rows_per_band) + 1, rows_per_band)),
-    )
-
-
-def explode_bands(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    sig_col: str = "sig",
-) -> DataFrame:
-    """(doc_id, sig) -> (doc_id, band, bucket), one row per (doc, band)."""
-    return signatures.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(band_buckets(F.col(sig_col), cfg.num_bands, cfg.rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    )
 
 
 def _all_pairs(ids: Column, s: Column) -> Column:
@@ -112,20 +81,7 @@ def candidate_pairs(
 ) -> DataFrame:
     """(doc_id, band, bucket) -> distinct candidate (a, b) with a < b.
 
-    ``observation``, grouped strategy only: the action that runs the
-    result also fills it with ``bucket_stats``' per-band figures as
-    ``band_XX_max_bucket`` and ``band_XX_pair_mass`` (see
-    ``_candidate_pairs_grouped``). The windowed strategy never feeds it.
-    """
-    if cfg.pair_strategy == "windowed":
-        return _candidate_pairs_windowed(bands, cfg)
-    return _candidate_pairs_grouped(bands, cfg, observation)
-
-
-def _candidate_pairs_grouped(
-    bands: DataFrame, cfg: DedupConfig, observation: Observation | None = None
-) -> DataFrame:
-    """One exchange: hash-agg to sorted member arrays, emit pairs natively.
+    One exchange: hash-agg to sorted member arrays, emit pairs natively.
 
     CASE branches are evaluated lazily per row, so a mega-bucket never
     materializes its O(s²) all-pairs array — only the O(s) chain+tree.
@@ -136,8 +92,6 @@ def _candidate_pairs_grouped(
     values equal ``bucket_stats``' on any non-empty input.
     """
     cap = cfg.bucket_pair_cap
-    if cfg.candidate_partitions:
-        bands = bands.repartition(cfg.candidate_partitions, "band", "bucket")
     grouped = (
         bands.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
@@ -171,65 +125,6 @@ def _band_skew(s: Column, num_bands: int) -> list[Column]:
             )
         )
     return exprs
-
-
-def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Round-1 strategy: window size-tag + rank, self-join for small
-    buckets, rank-joins for the chain+tree of over-cap buckets. Bounded
-    per-row memory; two exchanges + a sort. Emits the same pair set as the
-    grouped strategy (verified in tests/test_candidates.py)."""
-    cap = cfg.bucket_pair_cap
-    nparts = cfg.candidate_partitions
-    # one exchange on (band, bucket) feeds both the size tag and the rank
-    w = Window.partitionBy("band", "bucket")
-    tagged = bands.select(
-        "band",
-        "bucket",
-        "doc_id",
-        F.count("*").over(w).alias("bucket_size"),
-        F.row_number().over(w.orderBy("doc_id")).alias("rn"),
-    ).persist()
-
-    small = tagged.where(F.col("bucket_size") <= cap).select("band", "bucket", "doc_id")
-    if nparts:
-        small = small.repartition(nparts, "band", "bucket")
-    l = small.alias("l")
-    r = small.alias("r")
-    pairs_small = (
-        l.join(r, ["band", "bucket"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-    )
-
-    ranked = tagged.where(F.col("bucket_size") > cap).select(
-        "band", "bucket", "doc_id", "rn"
-    )
-    chain_rgt = ranked.select(
-        "band", "bucket", F.col("doc_id").alias("b_doc"), (F.col("rn") - 1).alias("rn")
-    )
-    chain = ranked.join(chain_rgt, ["band", "bucket", "rn"]).select(
-        F.col("doc_id").alias("a"), F.col("b_doc").alias("b")
-    )
-    tree_rgt = ranked.select(
-        "band",
-        "bucket",
-        F.col("doc_id").alias("b_doc"),
-        (F.col("rn") * 2).alias("rn"),  # parent rn -> children 2rn (and 2rn+1 below)
-    )
-    tree = (
-        ranked.join(tree_rgt, ["band", "bucket", "rn"])
-        .select(F.col("doc_id").alias("a"), F.col("b_doc").alias("b"))
-        .unionByName(
-            ranked.join(
-                tree_rgt.withColumn("rn", F.col("rn") + 1), ["band", "bucket", "rn"]
-            ).select(F.col("doc_id").alias("a"), F.col("b_doc").alias("b"))
-        )
-    )
-    pairs_big = chain.unionByName(tree).where(F.col("a") != F.col("b")).select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    )
-
-    return pairs_small.unionByName(pairs_big).dropDuplicates(["a", "b"])
 
 
 def candidate_pairs_two_sided(

@@ -144,6 +144,21 @@ def jaccard_verify(
     )
 
 
+def _set_rows(ids: np.ndarray, query: np.ndarray) -> np.ndarray:
+    """Row of each ``query`` id in the sorted ``ids``; raises KeyError on
+    an id the table does not hold (its insertion point is a neighbour's
+    row, or one past the end)."""
+    idx = np.searchsorted(ids, query)
+    found = idx < len(ids)
+    found[found] = ids[idx[found]] == query[found]
+    if not found.all():
+        raise KeyError(
+            "candidate ids missing from the broadcast set table: "
+            f"{query[~found][:5].tolist()}"
+        )
+    return idx
+
+
 def jaccard_verify_bcast(
     pairs: DataFrame,
     shingle_sets: DataFrame,
@@ -158,8 +173,10 @@ def jaccard_verify_bcast(
     per-pair set gather joins, candidate rows stay 16 B. The kernel's
     per-pair math is byte-identical to ``make_jaccard_udf`` (same sorted
     unsigned views, same searchsorted probe, same inter/union division),
-    so jaccard values and the `>= tau` cut are unchanged. Caller gates on
-    corpus size (``cfg.verify_broadcast_max_docs``)."""
+    so jaccard values and the `>= tau` cut are unchanged. A candidate id
+    missing from the set table raises (``_set_rows``) instead of being
+    scored against a neighbour's set. Caller gates on corpus size
+    (``operators.dedup.verify_pairs``)."""
     dt = "<u8" if cfg.shingle_hash_bytes == 8 else "<u4"
     item = cfg.shingle_hash_bytes
     spark = shingle_sets.sparkSession
@@ -194,8 +211,8 @@ def jaccard_verify_bcast(
         for batch in it:
             a_ids = batch.column("a").to_numpy(zero_copy_only=False)
             b_ids_ = batch.column("b").to_numpy(zero_copy_only=False)
-            ia = np.searchsorted(ids_, a_ids)
-            ib = np.searchsorted(ids_, b_ids_)
+            ia = _set_rows(ids_, a_ids)
+            ib = _set_rows(ids_, b_ids_)
             out = np.zeros(len(a_ids), dtype=np.float64)
             for i in range(len(a_ids)):
                 a = flat_[offs_[ia[i]] : offs_[ia[i] + 1]]
@@ -251,10 +268,8 @@ def jaccard_verify_screened(
     (miss ~1e-3 at J == tau, inside the >=0.99 recall budget; measured in
     tests/test_screen.py).
 
-    ``sigs`` must carry (doc_id, sh, sigp) — either the fused banded
-    kernel with ``sig_prefix_perms = cfg.screen_perms``, or
-    ``make_sig_prefix_udf`` over a materialized full signature (the
-    checkpointed DedupPipeline path).
+    ``sigs`` must carry (doc_id, sh, sigp): the fused banded kernel's
+    output with ``cfg.verify_screen`` set.
     """
     reject_below, accept_at = screen_counts(cfg)
     p = cfg.screen_perms

@@ -1,14 +1,19 @@
 """The resumable dedup pipeline (SURVEY.md §7 stages 1+3+4).
 
-Stages (each one an idempotent checkpoint table):
+Stages (each one an idempotent checkpoint table), composed by
+``operators.dedup.minhash_stages`` — the same chain the queries and the
+job CLI run:
 
-    signatures   : pages -> (doc_id, sh, sig, simhash)
-    cand_pairs   : band-explode + bucket self-join (+ SimHash chunks)
-    dup_pairs    : exact-Jaccard verified pairs (+ SimHash Hamming pairs
-                   + suffix long-repeat pairs when enabled); with
+    signatures   : pages -> (doc_id, sh, bands[, sigp]) from the fused
+                   shingle/MinHash/band kernel (sigp only with
+                   cfg.verify_screen)
+    cand_pairs   : band explode + bucket self-join -> (a, b)
+    dup_pairs    : verified (a, b, jaccard) from ``verify_pairs``: exact
+                   Jaccard through the gather joins or, inside the
+                   doc-count gate, a broadcast set table; with
                    cfg.verify_screen the two-tier MinHash-prefix screen
-                   verifies instead (clear accepts report est-Jaccard,
-                   only the uncertainty band gathers full shingle sets)
+                   (clear accepts report est-Jaccard, only the
+                   uncertainty band gathers full shingle sets)
     clusters     : union-find fixpoint over dup_pairs, singletons included
     keep_list    : the SHIPPED table — one representative per cluster
                    (doc_id == cluster_id) + docs-represented count;
@@ -41,21 +46,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
-from neural_locality_sensitive_hashing_spark.operators.candidates import (
-    bucket_stats,
-    candidate_pairs,
-    explode_bands,
-)
-from neural_locality_sensitive_hashing_spark.operators.connected_components import (
-    clusters_with_singletons,
-    connected_components,
-)
-from neural_locality_sensitive_hashing_spark.functions.minhash import make_sig_prefix_udf
-from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
-from neural_locality_sensitive_hashing_spark.operators.verify import (
-    jaccard_verify,
-    jaccard_verify_screened,
+from neural_locality_sensitive_hashing_spark.operators.candidates import bucket_stats
+from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    MINHASH_STAGES,
+    explode_fused_bands,
+    minhash_stages,
 )
 from neural_locality_sensitive_hashing_spark.sources.checkpoint import CheckpointCatalog
 
@@ -87,7 +82,7 @@ class PipelineReport:
 class DedupPipeline:
     """Checkpointed pages -> clusters pipeline."""
 
-    STAGES = ["signatures", "cand_pairs", "dup_pairs", "clusters", "keep_list"]
+    STAGES = list(MINHASH_STAGES)
 
     def __init__(
         self,
@@ -109,7 +104,8 @@ class DedupPipeline:
             json.dumps({"input": self.input_token, "cfg": cfg_d}, sort_keys=True).encode()
         ).hexdigest()
         for stage in self.STAGES:
-            upstream = hashlib.sha256(f"{upstream}/{stage}/v1".encode()).hexdigest()
+            # v2: signatures hold fused band hashes, not the full signature
+            upstream = hashlib.sha256(f"{upstream}/{stage}/v2".encode()).hexdigest()
             fps[stage] = upstream[:24]
         return fps
 
@@ -142,71 +138,13 @@ class DedupPipeline:
 
     def run(self, pages: DataFrame) -> tuple[DataFrame, PipelineReport]:
         report = PipelineReport()
-        cfg = self.cfg
 
-        def compute_signatures() -> DataFrame:
-            sigs = signatures_fused(pages, cfg)
-            if cfg.shingle_hash_bytes == 8:
-                # the SimHash contract is defined over 64-bit shingle
-                # hashes; with the 4-byte scale gather the column is
-                # meaningless (and the kernel would reject the buffer)
-                sigs = sigs.withColumn("simhash", simhash_udf(F.col("sh")))
-            if cfg.verify_screen:
-                # the screen's uint32 estimator prefix, derived from the
-                # full signature so the stage stays one Arrow pass; lands
-                # in the checkpoint (config is part of the fingerprint, so
-                # toggling the screen invalidates downstream stages)
-                sigs = sigs.withColumn(
-                    "sigp", make_sig_prefix_udf(cfg.screen_perms)(F.col("sig"))
-                )
-            return sigs
+        def hold(name, compute, observation):
+            df = self._stage(name, compute, report, observation)
+            return df, report.stage(name).rows
 
-        signatures = self._stage("signatures", compute_signatures, report)
-
-        # the per-band skew figures ride the candidate write; the windowed
-        # strategy has no grouped frame to observe, so the metrics step
-        # falls back to bucket_stats for it
-        band_obs = Observation() if cfg.pair_strategy != "windowed" else None
-
-        def compute_cands() -> DataFrame:
-            bands = explode_bands(signatures, cfg)
-            return candidate_pairs(bands, cfg, band_obs)
-
-        cands = self._stage("cand_pairs", compute_cands, report, band_obs)
-
-        jaccard_obs = Observation()
-
-        def compute_dups() -> DataFrame:
-            if cfg.verify_screen:
-                dups = jaccard_verify_screened(
-                    cands, signatures.select("doc_id", "sh", "sigp"), cfg
-                )
-            else:
-                dups = jaccard_verify(cands, signatures.select("doc_id", "sh"), cfg)
-            return dups.observe(jaccard_obs, F.avg("jaccard").alias("avg_jaccard"))
-
-        dups = self._stage("dup_pairs", compute_dups, report, jaccard_obs)
-
-        def compute_clusters() -> DataFrame:
-            labels = connected_components(dups, cfg.max_cc_iterations)
-            return clusters_with_singletons(labels, signatures, "doc_id")
-
-        clusters = self._stage("clusters", compute_clusters, report)
-
-        def compute_keep_list() -> DataFrame:
-            # one size aggregate over the CLUSTERS CHECKPOINT — survivors
-            # are the doc_id == cluster_id rows (the union-find labels
-            # clusters by min doc_id), no shuffle of pairs or corpus
-            sizes = clusters.groupBy("cluster_id").agg(
-                F.count("*").alias("n_docs_represented")
-            )
-            return (
-                clusters.where(F.col("doc_id") == F.col("cluster_id"))
-                .join(sizes, "cluster_id")
-                .select("doc_id", "n_docs_represented")
-            )
-
-        self._stage("keep_list", compute_keep_list, report)
+        held = minhash_stages(pages, self.cfg, hold, observe=True)
+        clusters = held["clusters"]
 
         # S8 metrics sink: one quality/efficiency row set per run, next to
         # the per-file lineage (the reference logs recall/query_size/
@@ -218,7 +156,8 @@ class DedupPipeline:
         if all(s.cached for s in report.stages):
             return clusters, report
         self.catalog.write_metrics(
-            self.metrics_record(report, signatures, dups), run_id=self._fps["clusters"]
+            self.metrics_record(report, held["signatures"], held["dup_pairs"]),
+            run_id=self._fps["clusters"],
         )
         return clusters, report
 
@@ -229,9 +168,9 @@ class DedupPipeline:
         job: counts are the snapshots' committed rows (``n_clusters`` is
         keep_list's, one survivor per cluster), ``avg_jaccard`` and the
         per-band skew figures were observed on the dup_pairs and
-        cand_pairs writes. A value missing from its record (windowed
-        pairs, or a snapshot written without observations) falls back to
-        one aggregate job over the snapshot for just that value."""
+        cand_pairs writes. A value missing from its record (a snapshot
+        written without observations) falls back to one aggregate job
+        over the snapshot for just that value."""
         n_docs = report.stage("signatures").rows
         dup_obs = report.stage("dup_pairs").observed
         if "avg_jaccard" in dup_obs:
@@ -259,7 +198,7 @@ class DedupPipeline:
         if all(k in band_obs for k in band_keys):
             metrics.update((k, float(band_obs[k])) for k in band_keys)
             return metrics
-        for row in bucket_stats(explode_bands(signatures, self.cfg)).collect():
+        for row in bucket_stats(explode_fused_bands(signatures)).collect():
             band = int(row["band"])
             metrics[f"band_{band:02d}_pair_mass"] = float(row["pair_mass"])
             metrics[f"band_{band:02d}_max_bucket"] = float(row["max_bucket"])

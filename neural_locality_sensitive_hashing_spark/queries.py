@@ -29,7 +29,9 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
     connected_components,
 )
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    minhash_dedup_clusters,
     minhash_dup_pairs,
+    minhash_keep_list,
     simhash_dup_pairs,
 )
 
@@ -397,9 +399,7 @@ SELECT a, b, jaccard FROM jac WHERE jaccard >= {CFG.jaccard_threshold}
 
 def q_minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = minhash_dup_pairs(docs, CFG)
-    labels = connected_components(pairs, CFG.max_cc_iterations)
-    return clusters_with_singletons(labels, docs)
+    return minhash_dedup_clusters(docs, CFG)
 
 
 SQL_MINHASH_DEDUP_CLUSTERS = f"""
@@ -426,17 +426,7 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     the union-find labeling, so survivors are exactly the rows where
     doc_id == cluster_id — no extra shuffle beyond the clusters query)."""
     docs = load(spark, sf_dir, "documents")
-    pairs = minhash_dup_pairs(docs, CFG)
-    labels = connected_components(pairs, CFG.max_cc_iterations)
-    clusters = clusters_with_singletons(labels, docs)
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count("*").alias("n_docs_represented")
-    )
-    return (
-        clusters.where(F.col("doc_id") == F.col("cluster_id"))
-        .join(sizes, "cluster_id")
-        .select("doc_id", "n_docs_represented")
-    )
+    return minhash_keep_list(docs, CFG)
 
 
 SQL_DEDUP_KEEP_LIST = f"""

@@ -4,7 +4,7 @@ The batch pipeline's stages are idempotent over snapshot tables, which makes
 incremental dedup a `foreachBatch` refinement (SURVEY.md §2.10): for each
 micro-batch of newly crawled pages,
 
-    1. signature the new docs (same kernels as batch),
+    1. signature and band the new docs (the batch path's fused kernel),
     2. candidate-generate new×new (grouped self-join with skew capping)
        PLUS new×old via an equi-join of the new bands against the
        accumulated BAND STORE — old×old is never rescanned; per-batch
@@ -16,11 +16,11 @@ State lives in parquet stores (Iceberg-style append tables), not in Spark's
 operator state — so the stream can restart from its checkpoint.
 
 State-store layout (the per-batch scan bound): all three stores are
-hash-partitioned on disk —
+hash-partitioned on disk (columns, then partition column) —
 
-    bands/      partitioned by pfx      = pmod(bucket, band_store_parts)
-    signatures/ partitioned by id_pfx   = pmod(doc_id, sig_store_parts)
-    dup_pairs/  partitioned by pair_pfx = pmod(a, pair_store_parts)
+    bands/      (band, bucket, doc_id)     pfx      = pmod(bucket, band_store_parts)
+    signatures/ (doc_id, sh)               id_pfx   = pmod(doc_id, sig_store_parts)
+    dup_pairs/  (a, b, jaccard, batch_id)  pair_pfx = pmod(a, pair_store_parts)
 
 and every probe/gather first collects the small set of partition values it
 can touch (≤ store_parts values, driver-side) and reads the store with an
@@ -49,6 +49,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,9 +57,11 @@ from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     candidate_pairs,
     candidate_pairs_two_sided,
-    explode_bands,
 )
-from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
+from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    banded_signatures_fused,
+    explode_fused_bands,
+)
 from neural_locality_sensitive_hashing_spark.operators.verify import jaccard_verify
 
 PAGES_SCHEMA = (
@@ -165,9 +168,34 @@ class IncrementalDeduper:
         self.sig_store = os.path.join(state_dir, "signatures")
         self.band_store = os.path.join(state_dir, "bands")
         self.pair_store = os.path.join(state_dir, "dup_pairs")
+        self._check_signature_store()
         # resuming over a state_dir written by the pre-partitioned layout:
         # rewrite the flat pair store once before any append or read
         self._migrate_flat_pair_store()
+
+    def _check_signature_store(self) -> None:
+        """Refuse a state dir written before the stream switched to the
+        fused band kernel: its signature store carries the full ``sig``
+        column and its band store holds buckets of a retired band-hash
+        family, so new×old probes would silently find nothing. Read off
+        one part file's footer with pyarrow — no Spark job."""
+        recover_store(self.sig_store)
+        part = next(
+            (
+                os.path.join(root, f)
+                for root, _, files in os.walk(self.sig_store)
+                for f in files
+                if f.endswith(".parquet")
+            ),
+            None,
+        )
+        if part is not None and "sig" in pq.read_schema(part).names:
+            raise ValueError(
+                f"{self.sig_store} holds full MinHash signatures (a 'sig' "
+                "column): the state dir was written with a retired band-hash "
+                "family, so its band store cannot be probed — rebuild it from "
+                "the source pages into a fresh state dir"
+            )
 
     def compact_stores(self) -> None:
         """Maintenance: collapse each store partition's per-batch small
@@ -264,8 +292,8 @@ class IncrementalDeduper:
 
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
-        new_sigs = signatures_fused(new_pages, cfg).persist()
-        new_bands = explode_bands(new_sigs, cfg).persist()
+        new_sigs = banded_signatures_fused(new_pages, cfg).persist()
+        new_bands = explode_fused_bands(new_sigs).persist()
 
         # new×new with the full skew-capped machinery ...
         cands = candidate_pairs(new_bands, cfg)
@@ -311,7 +339,7 @@ class IncrementalDeduper:
             .parquet(self.band_store)
         )
         (
-            new_sigs.select("doc_id", "sh", "sig")
+            new_sigs.select("doc_id", "sh")
             .withColumn(
                 "id_pfx", F.pmod(F.col("doc_id"), F.lit(self.sig_store_parts))
             )

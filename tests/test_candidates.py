@@ -3,23 +3,38 @@
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
+from neural_locality_sensitive_hashing_spark.functions.minhash import band_hashes_numpy
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     bucket_stats,
     candidate_pairs,
-    explode_bands,
 )
 
 CFG = DedupConfig(num_perm=8, num_bands=4, rows_per_band=2, bucket_pair_cap=4)
 
 
+def _bands(spark, rows):
+    """(doc_id, signature) rows -> (doc_id, band, bucket) with the fused
+    kernel's band hash."""
+    sigs = np.array([sig for _, sig in rows], dtype=np.int64).view(np.uint64)
+    buckets = band_hashes_numpy(sigs, CFG.num_bands, CFG.rows_per_band)
+    return spark.createDataFrame(
+        [
+            (doc_id, band, int(h))
+            for (doc_id, _), row in zip(rows, buckets)
+            for band, h in enumerate(row)
+        ],
+        "doc_id long, band int, bucket long",
+    )
+
+
 def test_identical_sigs_share_all_buckets(spark):
     sig = list(range(8))
-    df = spark.createDataFrame([(1, sig), (2, sig), (3, [x + 1 for x in sig])], "doc_id long, sig array<long>")
-    bands = explode_bands(df, CFG)
+    bands = _bands(spark, [(1, sig), (2, sig), (3, [x + 1 for x in sig])])
     assert bands.count() == 3 * 4
     shared = (
         bands.alias("l")
@@ -35,10 +50,7 @@ def test_identical_sigs_share_all_buckets(spark):
 def test_inverted_map(spark):
     """Mirror of the reference's indexer test: bucket -> sorted member docs."""
     sig_a, sig_b = [0, 0, 1, 1, 2, 2, 3, 3], [0, 0, 9, 9, 2, 2, 8, 8]
-    df = spark.createDataFrame(
-        [(1, sig_a), (2, sig_a), (3, sig_b)], "doc_id long, sig array<long>"
-    )
-    bands = explode_bands(df, CFG)
+    bands = _bands(spark, [(1, sig_a), (2, sig_a), (3, sig_b)])
     inv = {
         (r.band, r.bucket): sorted(r.docs)
         for r in bands.groupBy("band", "bucket").agg(F.collect_list("doc_id").alias("docs")).collect()
@@ -52,8 +64,7 @@ def test_inverted_map(spark):
 
 def test_candidate_pairs_dedup_and_order(spark):
     sig = [0, 0, 1, 1, 2, 2, 3, 3]
-    df = spark.createDataFrame([(5, sig), (2, sig)], "doc_id long, sig array<long>")
-    pairs = candidate_pairs(explode_bands(df, CFG), CFG).collect()
+    pairs = candidate_pairs(_bands(spark, [(5, sig), (2, sig)]), CFG).collect()
     assert len(pairs) == 1
     assert (pairs[0].a, pairs[0].b) == (2, 5)
 
@@ -62,8 +73,7 @@ def test_mega_bucket_chain(spark):
     """A bucket over the cap emits O(n) chain pairs that keep it connected."""
     sig = [7, 7, 7, 7, 7, 7, 7, 7]
     n = 40  # cap is 4 -> chain path
-    df = spark.createDataFrame([(i, sig) for i in range(n)], "doc_id long, sig array<long>")
-    pairs = candidate_pairs(explode_bands(df, CFG), CFG)
+    pairs = candidate_pairs(_bands(spark, [(i, sig) for i in range(n)]), CFG)
     rows = pairs.collect()
     # far fewer than all-pairs (4 bands x 40*39/2 = 3120 before dedup)
     assert len(rows) < 2 * n
@@ -83,8 +93,7 @@ def test_mega_bucket_chain(spark):
 
 def test_bucket_stats(spark):
     sig = [0, 0, 1, 1, 2, 2, 3, 3]
-    df = spark.createDataFrame([(i, sig) for i in range(5)], "doc_id long, sig array<long>")
-    stats = {r.band: r for r in bucket_stats(explode_bands(df, CFG)).collect()}
+    stats = {r.band: r for r in bucket_stats(_bands(spark, [(i, sig) for i in range(5)])).collect()}
     assert stats[0].n_buckets == 1 and stats[0].max_bucket == 5
     assert stats[0].pair_mass == 10
 
@@ -95,8 +104,7 @@ def test_observed_band_skew_equals_bucket_stats(spark):
     singleton buckets (max_bucket 1, pair_mass 0) alike."""
     rows = [(i, [0, 0, 1, 1, 2, 2, 100 + i, 100 + i]) for i in range(6)]
     rows += [(10 + i, [0, 9, 9 + i, 9 + i, 50 + i, 50 + i, 200 + i, 200 + i]) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, sig array<long>")
-    bands = explode_bands(df, CFG)
+    bands = _bands(spark, rows)
     obs = Observation()
     assert candidate_pairs(bands, CFG, obs).count() > 0
     want = {}
@@ -105,30 +113,3 @@ def test_observed_band_skew_equals_bucket_stats(spark):
         want[f"band_{r.band:02d}_pair_mass"] = r.pair_mass
     assert want["band_03_max_bucket"] == 1 and want["band_03_pair_mass"] == 0
     assert obs.get == want
-
-
-def test_grouped_equals_windowed_strategy(spark):
-    """The grouped (1-exchange) and windowed (round-1) physical strategies
-    emit the identical pair set, over-cap chain+tree included."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    rows = []
-    sig_dup = [1, 1, 2, 2, 3, 3, 4, 4]
-    for i in range(30):  # over-cap bucket (cap 4)
-        rows.append((i, sig_dup))
-    for i in range(40):  # sparse random sigs -> small buckets
-        rows.append((100 + i, [int(x) for x in rng.integers(0, 6, 8)]))
-    df = spark.createDataFrame(rows, "doc_id long, sig array<long>")
-    bands = explode_bands(df, CFG)
-    g = candidate_pairs(bands, CFG)
-    w = candidate_pairs(
-        bands,
-        DedupConfig(
-            num_perm=8, num_bands=4, rows_per_band=2, bucket_pair_cap=4,
-            pair_strategy="windowed",
-        ),
-    )
-    got_g = {(r.a, r.b) for r in g.collect()}
-    got_w = {(r.a, r.b) for r in w.collect()}
-    assert got_g == got_w and len(got_g) > 0

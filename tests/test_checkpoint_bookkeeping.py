@@ -16,10 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.operators.candidates import (
-    bucket_stats,
-    explode_bands,
-)
+from neural_locality_sensitive_hashing_spark.operators.candidates import bucket_stats
+from neural_locality_sensitive_hashing_spark.operators.dedup import explode_fused_bands
 from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
 from neural_locality_sensitive_hashing_spark.sources.checkpoint import CheckpointCatalog
 
@@ -83,7 +81,7 @@ def _old_way(catalog: CheckpointCatalog, cfg: DedupConfig) -> dict[str, float]:
         ),
         "candidate_pairs": float(catalog.read_snapshot("cand_pairs").count()),
     }
-    for row in bucket_stats(explode_bands(sigs, cfg)).collect():
+    for row in bucket_stats(explode_fused_bands(sigs)).collect():
         want[f"band_{row.band:02d}_pair_mass"] = float(row.pair_mass)
         want[f"band_{row.band:02d}_max_bucket"] = float(row.max_bucket)
     return want
@@ -190,14 +188,31 @@ def test_unobserved_records_fall_back_to_aggregates(piped):
     _assert_metrics_equal(after, before)
 
 
-def test_windowed_strategy_falls_back_to_bucket_stats(spark, pages_1k, tmp_path):
-    """The windowed pair strategy has no grouped frame to observe."""
-    cfg = DedupConfig(pair_strategy="windowed")
+def test_pipeline_takes_broadcast_verify_inside_gate(spark, pages_1k, tmp_path):
+    """The pipeline's verify goes through the same doc-count gate as the
+    query path, fed by the signatures stage's committed rows: with the
+    gate's floor at 0, pages_1k verifies in the broadcast mapInArrow, and
+    its dup_pairs snapshot equals the join path's."""
     pages = spark.read.parquet(pages_1k[0])
-    pipe = DedupPipeline(spark, cfg, str(tmp_path), input_token="pages_1k")
-    _, rep = _run_bounded(pipe.run, pages)
-    assert rep.stage("cand_pairs").observed == {}
-    _assert_metrics_equal(_logged(pipe.catalog), _old_way(pipe.catalog, cfg))
+    plans = {}
+
+    def dup_pairs(name, cfg):
+        pipe = DedupPipeline(spark, cfg, str(tmp_path / name), input_token="pages_1k")
+        write = pipe.catalog.write_snapshot
+
+        def spy(df, stage, *args):
+            plans[name, stage] = df._jdf.queryExecution().executedPlan().toString()
+            return write(df, stage, *args)
+
+        pipe.catalog.write_snapshot = spy
+        pipe.run(pages)
+        return sorted(tuple(r) for r in pipe.catalog.read_snapshot("dup_pairs").collect())
+
+    bcast = dup_pairs("bcast", DedupConfig(verify_broadcast_min_docs=0))
+    join = dup_pairs("join", DedupConfig())
+    assert "MapInArrow" in plans["bcast", "dup_pairs"]
+    assert "MapInArrow" not in plans["join", "dup_pairs"]
+    assert bcast == join and len(join) > 0
 
 
 def test_write_snapshot_runs_only_the_write(spark, tmp_path):
@@ -258,22 +273,24 @@ def test_spark_written_parts_read_with_driver_written(spark, tmp_path):
 
 def test_job_tool_checkpoint_mode_reports_stage_counts(spark, pages_1k, tmp_path):
     """tools/run_dedup_job.py --checkpoint-dir reports pair and cluster
-    counts from the stage records, fresh and fully resumed alike."""
+    counts from the stage records, fresh and fully resumed alike, and the
+    uncheckpointed mode (same stage graph, stages held in memory) reports
+    the same counts."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ckpt = str(tmp_path / "ckpt")
     reports = []
-    for i in range(2):
+    for i, mode in enumerate((["--checkpoint-dir", ckpt],) * 2 + ([],)):
         out = tmp_path / f"report{i}.json"
         subprocess.run(
             [sys.executable, os.path.join(repo, "tools", "run_dedup_job.py"),
-             "--pages", pages_1k[0], "--checkpoint-dir", ckpt,
+             "--pages", pages_1k[0], *mode,
              "--shuffle-partitions", "8", "--json-out", str(out)],
             check=True, cwd=repo, timeout=420,
             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
             env={**os.environ, "SPARK_GRAFT_CPUS": "8", "PYTHONPATH": repo},
         )
         reports.append(json.loads(out.read_text()))
-    fresh, resumed = reports
+    fresh, resumed, in_memory = reports
     assert resumed["resumed_stages"] == sorted(DedupPipeline.STAGES)
     cat = CheckpointCatalog(spark, ckpt)
     assert fresh["candidate_pairs"] == cat.read_snapshot("cand_pairs").count() > 0
@@ -282,7 +299,8 @@ def test_job_tool_checkpoint_mode_reports_stage_counts(spark, pages_1k, tmp_path
         cat.read_snapshot("clusters").select("cluster_id").distinct().count()
     )
     for key in ("candidate_pairs", "dup_pairs", "clusters"):
-        assert resumed[key] == fresh[key]
+        assert resumed[key] == fresh[key] == in_memory[key]
+    assert set(in_memory["stages"]) == set(DedupPipeline.STAGES)
     assert {s: v["rows"] for s, v in resumed["stages"].items()} == {
         s: v["rows"] for s, v in fresh["stages"].items()
     }

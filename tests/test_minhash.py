@@ -3,14 +3,35 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
+from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions.minhash import (
+    band_hashes_numpy,
     estimate_jaccard,
-    make_minhash_udf,
     minhash_numpy,
     minhash_params,
+    shingle_hashes_python,
 )
+from neural_locality_sensitive_hashing_spark.operators.dedup import banded_signatures_fused
+
+CFG = DedupConfig(num_perm=32, num_bands=8, rows_per_band=4, verify_screen=True, screen_perms=16)
+
+
+def _golden(text: str | None) -> tuple[bytes, list[int], bytes]:
+    """(sh, bands, sigp) of one text from the single-set numpy references."""
+    sh = shingle_hashes_python(text, CFG.shingle_k, {})
+    sig = minhash_numpy(sh.view(np.int64), *minhash_params(CFG.num_perm, CFG.minhash_seed))
+    bands = band_hashes_numpy(sig.view(np.uint64)[None, :], CFG.num_bands, CFG.rows_per_band)
+    sigp = sig[: CFG.screen_perms].astype(np.uint32).tobytes()
+    return sh.view(np.int64).tobytes(), bands[0].tolist(), sigp
+
+
+def _fused(spark, texts: list[str | None]) -> dict[int, tuple[bytes, list[int], bytes]]:
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    return {
+        r.doc_id: (bytes(r.sh), list(r.bands), bytes(r.sigp))
+        for r in banded_signatures_fused(df, CFG).collect()
+    }
 
 
 def test_params_deterministic():
@@ -21,23 +42,26 @@ def test_params_deterministic():
 
 
 def test_udf_matches_numpy_reference(spark):
+    """Golden test of the fused kernel: its shingle set, bands and screen
+    prefix equal band_hashes_numpy(minhash_numpy(shingle_hashes_python))
+    for every row of a multi-row Arrow batch."""
     rng = np.random.default_rng(7)
-    sets = [rng.integers(-(2**62), 2**62, size=rng.integers(1, 50)).tolist() for _ in range(20)]
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(sets)], "i int, sh array<long>")
-    udf = make_minhash_udf(32, 42)
-    got = {r.i: list(r.sig) for r in df.select("i", udf(F.col("sh")).alias("sig")).collect()}
-    a, b = minhash_params(32, 42)
-    for i, s in enumerate(sets):
-        want = list(minhash_numpy(np.array(s, dtype=np.int64), a, b))
-        assert got[i] == want, f"row {i}"
+    vocab = [f"w{i}" for i in range(300)]
+    texts = [" ".join(rng.choice(vocab, size=rng.integers(1, 60))) for _ in range(20)]
+    texts.append(texts[0])  # an identical doc collides in every band
+    got = _fused(spark, texts)
+    for i, t in enumerate(texts):
+        assert got[i] == _golden(t), f"row {i}"
+    assert got[len(texts) - 1][1] == got[0][1]
 
 
 def test_null_and_empty(spark):
-    df = spark.createDataFrame([(0, None), (1, []), (2, [5])], "i int, sh array<long>")
-    udf = make_minhash_udf(8, 42)
-    rows = {r.i: r.sig for r in df.select("i", udf(F.col("sh")).alias("sig")).collect()}
-    assert rows[0] is None and rows[1] is None
-    assert len(rows[2]) == 8
+    """Null and empty text are one shingle (the empty token's hash), the
+    same as the single-set reference, not a null row."""
+    got = _fused(spark, [None, "", "five"])
+    assert got[0] == got[1] == _golden("")
+    assert got[2] == _golden("five")
+    assert len(got[0][1]) == CFG.num_bands
 
 
 def test_estimate_accuracy():

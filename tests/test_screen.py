@@ -103,3 +103,25 @@ def test_bcast_verify_equals_join_verify(spark, pages):
     spark.catalog.clearCache()
     assert join_rows, "fixture must contain planted duplicates"
     assert bcast_rows == join_rows
+
+
+@pytest.mark.parametrize("missing", [15, 99], ids=["between", "past_end"])
+def test_bcast_verify_missing_id_raises(spark, missing):
+    """A candidate id absent from the broadcast set table fails the job
+    loudly instead of being scored against a neighbour's set: 15 falls
+    between the present ids 10 and 20 (its insertion point is doc 20's
+    row), 99 falls past the last one."""
+    import numpy as np
+
+    from neural_locality_sensitive_hashing_spark.operators.verify import jaccard_verify_bcast
+
+    cfg = DedupConfig()
+    same = np.arange(1, 6, dtype="<u8").tobytes()
+    sets = spark.createDataFrame(
+        [(10, same), (20, same), (30, same)], "doc_id long, sh binary"
+    )
+    ok = spark.createDataFrame([(10, 20)], "a long, b long")
+    assert [tuple(r) for r in jaccard_verify_bcast(ok, sets, cfg).collect()] == [(10, 20, 1.0)]
+    bad = spark.createDataFrame([(10, missing)], "a long, b long")
+    with pytest.raises(Exception, match=rf"missing from the broadcast set table: \[{missing}\]"):
+        jaccard_verify_bcast(bad, sets, cfg).collect()

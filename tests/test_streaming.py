@@ -53,9 +53,11 @@ def test_store_partition_pruning(spark, pages_1k, tmp_path):
 
     from neural_locality_sensitive_hashing_spark.operators.candidates import (
         candidate_pairs_two_sided,
-        explode_bands,
     )
-    from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
+    from neural_locality_sensitive_hashing_spark.operators.dedup import (
+        banded_signatures_fused,
+        explode_fused_bands,
+    )
 
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
@@ -68,8 +70,8 @@ def test_store_partition_pruning(spark, pages_1k, tmp_path):
     dedup = run_incremental(spark, f"{input_dir}/*", str(tmp_path / "state"), CFG)
 
     # a 1-doc probe touches <= 32 buckets -> <= 32 of 64 band partitions
-    probe = signatures_fused(pages.where("doc_id = 999"), CFG)
-    probe_bands = explode_bands(probe, CFG)
+    probe = banded_signatures_fused(pages.where("doc_id = 999"), CFG)
+    probe_bands = explode_fused_bands(probe)
     full_bands = spark.read.parquet(dedup.band_store)
     pruned_bands = dedup.probe_band_store(probe_bands)
     n_full, n_pruned = full_bands.count(), pruned_bands.count()
@@ -95,6 +97,44 @@ def test_store_partition_pruning(spark, pages_1k, tmp_path):
     assert pruned_sigs.count() <= 0.3 * full_sigs
     got = {r.doc_id for r in pruned_sigs.where(F.col("doc_id").isin([7, 23])).collect()}
     assert got == {7, 23}
+
+
+def test_state_dir_with_full_signatures_is_refused(spark, tmp_path):
+    """A state dir whose signature store still holds the full ``sig``
+    column has band buckets of a retired hash family: the deduper refuses
+    it before any Spark job runs, instead of probing it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    part = tmp_path / "state" / "signatures" / "id_pfx=3"
+    part.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"doc_id": [3], "sh": [b"\x00" * 8], "sig": [[1, 2, 3, 4]]}),
+        str(part / "part-00000.parquet"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("refuse-old-state", "refuse-old-state")
+    try:
+        with pytest.raises(ValueError, match="retired band-hash family"):
+            IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("refuse-old-state")) == []
+
+    # the store layout the deduper writes itself is accepted on resume
+    fresh = str(tmp_path / "fresh")
+    dedup = IncrementalDeduper(spark, CFG, fresh)
+    dedup.process_batch(
+        spark.createDataFrame([(1, "a b c d e f"), (2, "a b c d e f")], "doc_id long, text string"),
+        0,
+    )
+    IncrementalDeduper(spark, CFG, fresh)
+    assert {(r.a, r.b) for r in dedup.dup_pairs().collect()} == {(1, 2)}
 
 
 def test_incremental_overcap_bucket_cluster_equivalence(spark, tmp_path):

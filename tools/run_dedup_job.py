@@ -3,9 +3,11 @@
     spark-submit --master local[N] --py-files nlsh_spark.zip \
         tools/run_dedup_job.py --pages /path/pages.parquet --json-out out.json
 
-Runs the full MinHash-LSH dedup pipeline (signatures -> candidates ->
-verify -> clusters) and writes a one-line JSON timing report with
-per-stage wall times.
+Runs the MinHash-LSH dedup chain (signatures -> candidates -> verify ->
+clusters -> keep-list, composed by operators.dedup.minhash_stages) and
+writes a one-line JSON report with per-stage rows and wall times. With
+--checkpoint-dir the chain runs through the resumable DedupPipeline;
+otherwise every stage is persisted in memory.
 """
 
 from __future__ import annotations
@@ -36,25 +38,20 @@ def _input_token(pages_path: str, n_docs: int) -> str:
 
 
 def _write_survivors_archives(
-    pages_full, clusters, out_dir: str, fmt: str
+    pages_full, keep_list, out_dir: str, fmt: str
 ) -> dict:
-    """Keep-list pages (one per cluster: doc_id == cluster_id) re-shipped
-    as crawl archives via the distributed sink — one shuffle (the doc_id
-    join back to the full pages), one archive per partition. ``fmt`` =
-    'warc' (full pages: url/warc_ts/html) or 'wet' (extracted text only:
-    url/warc_ts/text — the Common Crawl WARC->WET flow applied to the
-    deduplicated keep-list)."""
-    from pyspark.sql import functions as F
-
+    """Keep-list pages (one per cluster) re-shipped as crawl archives via
+    the distributed sink — one shuffle (the doc_id join back to the full
+    pages), one archive per partition. ``fmt`` = 'warc' (full pages:
+    url/warc_ts/html) or 'wet' (extracted text only: url/warc_ts/text —
+    the Common Crawl WARC->WET flow applied to the deduplicated
+    keep-list)."""
     from neural_locality_sensitive_hashing_spark.sources.warc import (
         write_warc,
         write_wet,
     )
 
-    survivors = clusters.where(
-        F.col("doc_id") == F.col("cluster_id")
-    ).select("doc_id")
-    kept = pages_full.join(survivors, "doc_id")
+    kept = pages_full.join(keep_list.select("doc_id"), "doc_id")
     if fmt == "warc":
         manifest = write_warc(
             kept.select("url", "warc_ts", "html"), out_dir
@@ -113,22 +110,13 @@ def main() -> None:
         "local corpus still fans out across all cores (at cluster scale "
         "inputs are many files and the default 128m applies)",
     )
-    ap.add_argument("--with-simhash", action="store_true")
     ap.add_argument(
         "--fast", action="store_true",
         help="skip per-stage count() actions: one end-to-end run (plus the "
-        "union-find's own convergence actions) — the throughput-measurement "
-        "mode; per-stage timings are omitted",
+        "verify gate's count, the union-find's own convergence actions and "
+        "the final keep-list count) — the throughput-measurement mode; "
+        "per-stage timings are omitted",
     )
-    ap.add_argument(
-        "--repartition", type=int, default=-1,
-        help="repartition the narrow (doc_id, text) projection to N "
-        "partitions before compute; 0 = 2x defaultParallelism; -1 (default) "
-        "= no repartition — the parquet scan's maxPartitionBytes splits "
-        "already fan out across cores, and skipping the exchange keeps the "
-        "full corpus text out of the shuffle entirely",
-    )
-    ap.add_argument("--with-longrepeat", action="store_true")
     ap.add_argument(
         "--long-repeat-exact", type=int, default=None, metavar="MIN_RUN",
         help="exact long-repeat verifier tier (SURVEY §7 stage 3): winnowed "
@@ -159,8 +147,8 @@ def main() -> None:
     ap.add_argument(
         "--checkpoint-dir", default=None,
         help="run through the RESUMABLE DedupPipeline instead of the "
-        "straight-line plan: each stage (signatures, cand_pairs, "
-        "dup_pairs, clusters) lands in a fingerprinted snapshot table; "
+        "in-memory stages: each stage (signatures, cand_pairs, "
+        "dup_pairs, clusters, keep_list) lands in a fingerprinted snapshot table; "
         "re-submitting the identical job resumes at the first stage whose "
         "fingerprint misses (kill it mid-run and re-run to see). The "
         "report's stages carry cached/rows per stage",
@@ -171,7 +159,7 @@ def main() -> None:
         "cluster + n_docs_represented — the table a training pipeline "
         "ships) as parquet to this path; in --checkpoint-dir mode it is "
         "re-exported from the keep_list snapshot stage, otherwise "
-        "computed from the in-memory clusters",
+        "written from the in-memory keep_list stage",
     )
     ap.add_argument(
         "--recrawl-dedup", action="store_true",
@@ -188,9 +176,6 @@ def main() -> None:
         "8 = full 64-bit, bit-compatible with the round-2 runs",
     )
     args = ap.parse_args()
-    if args.with_simhash and args.shingle_bytes != 8:
-        ap.error("--with-simhash requires --shingle-bytes 8 (the 64-bit "
-                 "SimHash contract is defined over 64-bit shingle hashes)")
     if args.from_warc and args.from_wet:
         ap.error("--from-warc and --from-wet are mutually exclusive")
     if args.survivors_warc_out and not args.from_warc:
@@ -202,37 +187,14 @@ def main() -> None:
         ap.error("--survivors-wet-out needs --from-warc or --from-wet "
                  "(only the archive input paths carry the url/warc_ts/"
                  "text page columns the WET writer re-ships)")
-    if args.checkpoint_dir and (
-        args.with_simhash or args.with_longrepeat or args.long_repeat_exact
-    ):
+    if args.checkpoint_dir and args.long_repeat_exact is not None:
         # validate BEFORE the JVM starts and the input is scanned
-        ap.error("--checkpoint-dir covers the exact-Jaccard pipeline; "
-                 "run the secondary verifiers in the straight-line mode")
+        ap.error("--checkpoint-dir covers the MinHash pipeline; run "
+                 "--long-repeat-exact in the uncheckpointed mode")
 
     from pyspark.sql import SparkSession
 
     from neural_locality_sensitive_hashing_spark.config import DedupConfig
-    from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
-    from neural_locality_sensitive_hashing_spark.operators.candidates import (
-        candidate_pairs,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.connected_components import (
-        clusters_with_singletons,
-        connected_components,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.dedup import (
-        banded_signatures_fused,
-        explode_fused_bands,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs,
-        long_repeat_pairs_exact,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.verify import (
-        jaccard_verify,
-        jaccard_verify_screened,
-        simhash_verify,
-    )
 
     builder = SparkSession.builder.appName("nlsh-dedup-job")
     if args.shuffle_partitions:
@@ -310,121 +272,26 @@ def main() -> None:
             pages.select("doc_id", "url", "warc_ts", "text")
         )
     pages = pages.select("doc_id", "text")
-    if args.repartition >= 0:
-        # optional: balance the narrow projection across all cores
-        # regardless of the source file's row-group layout
-        nparts = args.repartition or 2 * cores
-        pages = pages.repartition(nparts, "doc_id")
 
+    t_all = time.time()
     if args.checkpoint_dir:
         from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
 
-        t_all = time.time()
         pipe = DedupPipeline(
             spark, cfg, args.checkpoint_dir,
             input_token=_input_token(args.pages, n_docs),
         )
-        clusters, rep = pipe.run(pages)
-        wall = round(time.time() - t_all, 2)
-        report = {
-            "docs": n_docs,
-            "cores": cores,
-            "wall_sec": wall,
-            "docs_per_sec": round(n_docs / wall, 1),
-            "stages": {
-                s.stage: {"cached": s.cached, "rows": s.rows, "wall_sec": s.wall_sec}
-                for s in rep.stages
-            },
-            # committed snapshot rows; one keep_list row per cluster
-            "candidate_pairs": rep.stage("cand_pairs").rows,
-            "dup_pairs": rep.stage("dup_pairs").rows,
-            "clusters": rep.stage("keep_list").rows,
-            "resumed_stages": sorted(rep.cached_stages()),
+        _, rep = pipe.run(pages)
+        kl = pipe.catalog.read_snapshot("keep_list")
+        stages = {
+            s.stage: {"cached": s.cached, "rows": s.rows, "wall_sec": s.wall_sec}
+            for s in rep.stages
         }
-        if args.keep_list_out:
-            kl = pipe.catalog.read_snapshot("keep_list")
-            kl.write.mode("overwrite").parquet(args.keep_list_out)
-            report["keep_list_out"] = args.keep_list_out
-        if args.survivors_warc_out:
-            report["survivors_warc"] = _write_survivors_archives(
-                pages_full, clusters, args.survivors_warc_out, "warc"
-            )
-        if args.survivors_wet_out:
-            report["survivors_wet"] = _write_survivors_archives(
-                pages_full, clusters, args.survivors_wet_out, "wet"
-            )
-        line = json.dumps(report)
-        print(line)
-        if args.json_out:
-            with open(args.json_out, "w") as f:
-                f.write(line + "\n")
-        spark.stop()
-        return
-
-    stages: dict[str, float] = {}
-    t_all = time.time()
-
-    t0 = time.time()
-    sigs = banded_signatures_fused(pages, cfg)
-    if args.with_simhash:
-        from pyspark.sql import functions as F
-
-        sigs = sigs.withColumn("simhash", simhash_udf(F.col("sh")))
-    sigs = sigs.persist()
-    if not args.fast:
-        sigs.count()
-        stages["signatures"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    cands = candidate_pairs(explode_fused_bands(sigs), cfg).persist()
-    n_cands = -1
-    if not args.fast:
-        n_cands = cands.count()
-        stages["cand_pairs"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    if cfg.verify_screen:
-        dups = jaccard_verify_screened(cands, sigs.select("doc_id", "sh", "sigp"), cfg)
+        # committed snapshot rows; one keep_list row per cluster
+        rows = {s.stage: s.rows for s in rep.stages}
+        extra = {"resumed_stages": sorted(rep.cached_stages())}
     else:
-        dups = jaccard_verify(cands, sigs.select("doc_id", "sh"), cfg)
-    if args.with_simhash:
-        from pyspark.sql import functions as F
-
-        sim_pairs = simhash_verify(cands, sigs.select("doc_id", "simhash"), cfg).select(
-            "a", "b", F.lit(1.0).alias("jaccard")
-        )
-        dups = dups.unionByName(sim_pairs).dropDuplicates(["a", "b"])
-    if args.with_longrepeat:
-        from pyspark.sql import functions as F
-
-        lr = long_repeat_pairs(pages, cfg).select("a", "b", F.lit(1.0).alias("jaccard"))
-        dups = dups.unionByName(lr).dropDuplicates(["a", "b"])
-    n_lre = -1
-    if args.long_repeat_exact is not None:
-        from pyspark.sql import functions as F
-
-        lre = (
-            long_repeat_pairs_exact(pages, cfg)
-            .where(F.col("max_run") >= F.lit(args.long_repeat_exact))
-            .persist()
-        )
-        if not args.fast:
-            n_lre = lre.count()
-        dups = dups.unionByName(
-            lre.select("a", "b", F.lit(1.0).alias("jaccard"))
-        ).dropDuplicates(["a", "b"])
-    dups = dups.persist()
-    n_dups = -1
-    if not args.fast:
-        n_dups = dups.count()
-        stages["verify"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    labels = connected_components(dups, cfg.max_cc_iterations)
-    clusters = clusters_with_singletons(labels, sigs, "doc_id")
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    stages["clusters"] = round(time.time() - t0, 2)
-
+        kl, stages, rows, extra = _run_uncheckpointed(pages, cfg, args)
     wall = round(time.time() - t_all, 2)
     report = {
         "docs": n_docs,
@@ -432,36 +299,21 @@ def main() -> None:
         "wall_sec": wall,
         "docs_per_sec": round(n_docs / wall, 1),
         "stages": stages,
-        "candidate_pairs": n_cands,
-        "dup_pairs": n_dups,
-        "clusters": n_clusters,
+        "candidate_pairs": rows.get("cand_pairs", -1),
+        "dup_pairs": rows.get("dup_pairs", -1),
+        "clusters": rows["keep_list"],
+        **extra,
     }
-    if args.long_repeat_exact is not None:
-        report["long_repeat_exact"] = {
-            "min_run": args.long_repeat_exact,
-            "pairs": n_lre,
-        }
     if args.keep_list_out:
-        from pyspark.sql import functions as F
-
-        sizes = clusters.groupBy("cluster_id").agg(
-            F.count("*").alias("n_docs_represented")
-        )
-        (
-            clusters.where(F.col("doc_id") == F.col("cluster_id"))
-            .join(sizes, "cluster_id")
-            .select("doc_id", "n_docs_represented")
-            .write.mode("overwrite")
-            .parquet(args.keep_list_out)
-        )
+        kl.write.mode("overwrite").parquet(args.keep_list_out)
         report["keep_list_out"] = args.keep_list_out
     if args.survivors_warc_out:
         report["survivors_warc"] = _write_survivors_archives(
-            pages_full, clusters, args.survivors_warc_out, "warc"
+            pages_full, kl, args.survivors_warc_out, "warc"
         )
     if args.survivors_wet_out:
         report["survivors_wet"] = _write_survivors_archives(
-            pages_full, clusters, args.survivors_wet_out, "wet"
+            pages_full, kl, args.survivors_wet_out, "wet"
         )
     line = json.dumps(report)
     print(line)
@@ -469,6 +321,47 @@ def main() -> None:
         with open(args.json_out, "w") as f:
             f.write(line + "\n")
     spark.stop()
+
+
+def _run_uncheckpointed(pages, cfg, args):
+    """The MinHash chain with every stage persisted and, unless --fast,
+    counted and timed -> (keep-list, stage walls, stage rows, extra
+    report fields). --fast counts only the keep-list, which runs the
+    chain end to end."""
+    from pyspark.sql import functions as F
+
+    from neural_locality_sensitive_hashing_spark.operators.dedup import minhash_stages
+
+    stages: dict[str, float] = {}
+    rows: dict[str, int] = {}
+    extra: dict = {}
+
+    def hold(name, compute, observation):
+        t0 = time.time()
+        df = compute().persist()
+        if not args.fast or name == "keep_list":
+            rows[name] = df.count()
+        if not args.fast:
+            stages[name] = round(time.time() - t0, 2)
+        return df, rows.get(name)
+
+    lre = None
+    if args.long_repeat_exact is not None:
+        from neural_locality_sensitive_hashing_spark.operators.suffix import (
+            long_repeat_pairs_exact,
+        )
+
+        lre = (
+            long_repeat_pairs_exact(pages, cfg)
+            .where(F.col("max_run") >= F.lit(args.long_repeat_exact))
+            .persist()
+        )
+        extra["long_repeat_exact"] = {
+            "min_run": args.long_repeat_exact,
+            "pairs": -1 if args.fast else lre.count(),
+        }
+    held = minhash_stages(pages, cfg, hold, extra_pairs=lre)
+    return held["keep_list"], stages, rows, extra
 
 
 if __name__ == "__main__":
